@@ -102,25 +102,6 @@ def _uhash(h: F.Column, k: int) -> F.Column:
     return (F.lit(a).cast("long") * h + F.lit(b)) % F.lit(MINHASH_P)
 
 
-def minhash_signatures(
-    sh: DataFrame,
-    num_hashes: int = 8,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """MinHash signature per doc from exploded (id, shingle) pairs: for
-    hash k, min over shingles of (a_k*md5_32(shingle)+b_k) mod P.
-
-    Shape: one hash aggregate on doc_id computing all ``num_hashes``
-    mins in a single pass (map-side partial aggregation keeps the
-    shuffle tiny: num_hashes longs per doc per mapper).
-    """
-    hashed = sh.select(F.col(id_col), _base_hash(F.col("shingle")).alias("_h"))
-    aggs = [
-        F.min(_uhash(F.col("_h"), k)).alias(f"mh{k}") for k in range(num_hashes)
-    ]
-    return hashed.groupBy(id_col).agg(*aggs)
-
-
 def minhash_signatures_mapside(
     df: DataFrame,
     text_col: str = "text",
@@ -129,9 +110,9 @@ def minhash_signatures_mapside(
     id_col: str = "doc_id",
 ) -> DataFrame:
     """Zero-shuffle MinHash: signatures computed per row from the shingle
-    ARRAY — the scan is the only stage. Identical output to
-    :func:`minhash_signatures`; preferred at scale (the explode+groupBy
-    form shuffles |shingles| rows, this shuffles nothing).
+    ARRAY — for hash k, min over shingles of (a_k*md5_32(shingle)+b_k)
+    mod P. The scan is the only stage (an explode+groupBy formulation
+    shuffles |shingles| rows, this shuffles nothing).
 
     The base-hash array is materialized in its own projection so the one
     md5-per-shingle is computed once, not once per signature column

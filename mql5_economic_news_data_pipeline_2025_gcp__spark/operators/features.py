@@ -95,24 +95,6 @@ def with_high_impact_count(
     )
 
 
-def with_group_mean_impute(
-    df: DataFrame,
-    cols: Sequence[str],
-    key: Sequence[str] = tuple(SERIES_KEY),
-    default: float = 0.0,
-) -> DataFrame:
-    """F10/A3: fill nulls with the per-group mean, falling back to
-    ``default`` for all-null groups (reference TRAIN:347-357). Expressed
-    as an unordered group window so Catalyst shares the exchange with the
-    other per-key windows."""
-    w = Window.partitionBy(*key)
-    for c in cols:
-        df = df.withColumn(
-            c, F.coalesce(F.col(c), F.avg(F.col(c)).over(w), F.lit(default))
-        )
-    return df
-
-
 def drop_allnull_groups(
     df: DataFrame,
     cols: Sequence[str],
@@ -175,40 +157,19 @@ def denormalize(col: Column, mn: Column, mx: Column) -> Column:
     return col * rng + mn
 
 
-def with_sequences(
-    df: DataFrame,
-    feature_cols: Sequence[str],
-    seq_length: int,
-    key: Sequence[str] = tuple(SERIES_KEY),
-    order: Sequence[str] = ("event_ts",),
-    out_col: str = "sequence",
-) -> DataFrame:
-    """W4: sliding-window sequence construction for RNN input (reference
-    TRAIN:484-488): for each row, the previous ``seq_length`` feature
-    vectors form the input; rows without a full history are dropped.
-
-    ``collect_list(struct)`` over a bounded row frame — per-group frames
-    are small (economic series are O(100s) rows/group), so the frame never
-    exceeds group size; the cost is the same single hash shuffle as W1.
-    """
-    w = series_window(key, order).rowsBetween(-seq_length, -1)
-    feat = F.struct(*[F.col(c) for c in feature_cols])
-    df = df.withColumn(out_col, F.collect_list(feat).over(w))
-    return df.filter(F.size(F.col(out_col)) == seq_length)
-
-
 def latest_per_group(
     df: DataFrame,
     key: Sequence[str] = tuple(SERIES_KEY),
     order_col: str = "event_ts",
-    tie_breaker: str | None = None,
+    tie_breaker: str | Sequence[str] = (),
 ) -> DataFrame:
     """W5: latest row per group — the 'live forecast' row (reference
-    TEST:95-103). row_number over a desc window; a deterministic
-    tie-breaker keeps results stable under equal timestamps."""
-    order = [F.col(order_col).desc()]
-    if tie_breaker:
-        order.append(F.col(tie_breaker).desc())
+    TEST:95-103). row_number over a desc window; deterministic
+    tie-breaker column(s), compared in order and descending, keep
+    results stable under equal ``order_col`` values. This is the one
+    keep-newest window of the package (the S9 upsert ranks through it)."""
+    ties = [tie_breaker] if isinstance(tie_breaker, str) else list(tie_breaker)
+    order = [F.col(c).desc() for c in (order_col, *ties)]
     w = Window.partitionBy(*key).orderBy(*order)
     return (
         df.withColumn("_rn", F.row_number().over(w))

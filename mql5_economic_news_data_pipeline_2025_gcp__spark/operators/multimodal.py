@@ -202,15 +202,6 @@ def documents_as_media(df: DataFrame) -> DataFrame:
     )
 
 
-def attach_payload_uri(df: DataFrame, base_uri: str) -> DataFrame:
-    """Out-of-band payload layout: replace inline bytes with a URI column
-    (the 100 TB-friendly shape: parquet holds pointers + metadata)."""
-    return df.withColumn(
-        "payload_uri",
-        F.concat(F.lit(base_uri.rstrip("/") + "/"), F.col("asset_id"), F.lit(".bin")),
-    ).drop("payload")
-
-
 #: Output schema of the frame-sampling stage (one row PER FRAME).
 FRAME_SAMPLE_SCHEMA = (
     "asset_id long, frame_idx int, t_ms long, frame_checksum string"

@@ -2,18 +2,23 @@
 UPDATE`` on UNIQUE(Date,Time,Currency,Event) — `SQL:20`, `PUSH:175-188`).
 
 Spark-first design: Parquet has no in-place update, so upsert =
-``unionByName(existing, incoming)`` → window dedup keeping the newest
-version per natural key. A recency column decides the winner; within the
-same batch, a monotonically increasing ingest sequence breaks ties so
-"latest delivered wins" exactly like MySQL's ON DUPLICATE KEY UPDATE.
+``unionByName(existing, incoming)`` → keep one row per natural key.
+:func:`upsert` is the one merge rule every S9 path shares (the in-memory
+merge, the partition-pruned merge below, the parquet write-side merge
+and the txn-table ``MERGE``): incoming beats existing, then the newest
+recency value wins, then ``tie_cols`` (descending) — or, when none are
+given, the delivery order of the incoming rows, so "latest delivered
+wins" exactly like MySQL's ON DUPLICATE KEY UPDATE. The ranking is the
+package's one keep-newest window, :func:`features.latest_per_group`.
 
 Scale notes (100 TB): the dedup is one hash shuffle on the natural key —
 the same cost profile as any wide agg. On a real deployment this is the
 classic Delta/Iceberg ``MERGE INTO``; without those jars we keep the
 union+window formulation, which AQE handles well under key skew. For
-incremental loads, partition the table by month(event_ts) and rewrite
-only partitions that received keys (partition pruning makes the
-read-back cheap).
+incremental loads the table is partitioned (e.g. by month) and only the
+partitions that received keys are read back and rewritten, each write
+asking for dynamic partition overwrite through its own writer option
+(``partitionOverwriteMode``), never through the shared session conf.
 """
 
 from __future__ import annotations
@@ -21,8 +26,10 @@ from __future__ import annotations
 import os
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .features import latest_per_group
 
 #: Natural dedup identity of the events table (reference SQL:20).
 NATURAL_KEY = ["Date", "Time", "Currency", "Event"]
@@ -33,34 +40,26 @@ def upsert(
     incoming: DataFrame,
     key: Sequence[str] = tuple(NATURAL_KEY),
     recency_col: str = "event_ts",
+    tie_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """Union + keep-newest-per-key. ``incoming`` beats ``existing`` on
-    ties, and within a batch the LAST-delivered row wins — the sequential
+    """Union + keep-newest-per-key. ``incoming`` beats ``existing``, then
+    the newest ``recency_col`` wins, then ``tie_cols`` (descending). With
+    no ``tie_cols`` the LAST-delivered incoming row wins — the sequential
     ``executemany`` upsert applies updates in delivery order, so a batch
     containing the same key twice ends with the later row's values. The
     delivery order is captured as ``monotonically_increasing_id()`` over
     the incoming scan (increasing in file/row order per split)."""
-    inc = incoming.withColumn("_src_priority", F.lit(1)).withColumn(
-        "_ingest_seq", F.monotonically_increasing_id()
-    )
-    if existing is None:
-        unioned = inc
-    else:
-        unioned = (
-            existing.withColumn("_src_priority", F.lit(0))
-            .withColumn("_ingest_seq", F.lit(-1).cast("long"))
-            .unionByName(inc)
-        )
-    w = Window.partitionBy(*key).orderBy(
-        F.col("_src_priority").desc(),
-        F.col(recency_col).desc(),
-        F.col("_ingest_seq").desc(),
-    )
-    return (
-        unioned.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_src_priority", "_ingest_seq")
-    )
+    new, old = {"_upsert_pri": F.lit(1)}, {"_upsert_pri": F.lit(0)}
+    if not tie_cols:
+        new["_upsert_seq"] = F.monotonically_increasing_id()
+        old["_upsert_seq"] = F.lit(None).cast("long")
+    unioned = incoming.withColumns(new)
+    if existing is not None:
+        unioned = existing.withColumns(old).unionByName(unioned)
+    ties = list(tie_cols) or ["_upsert_seq"]
+    return latest_per_group(
+        unioned, key, order_col="_upsert_pri", tie_breaker=[recency_col, *ties]
+    ).drop(*new)
 
 
 # ------------------------------------------------------- partitioned merge
@@ -84,9 +83,8 @@ def upsert(
 MAX_BATCH_PARTITIONS = 10_000
 
 
-def _touched_partitions(
-    incoming: DataFrame, partition_col: str, cap: int = MAX_BATCH_PARTITIONS
-) -> list:
+def _touched_partitions(incoming: DataFrame, partition_col: str) -> list:
+    cap = MAX_BATCH_PARTITIONS
     vals = [
         r[0]
         for r in incoming.select(partition_col)
@@ -110,30 +108,6 @@ def _partition_filter(partition_col: str, vals: list):
     return cond
 
 
-def _merge_touched(
-    existing_touched: DataFrame,
-    incoming: DataFrame,
-    key: Sequence[str],
-    recency_col: str,
-    tie_cols: Sequence[str],
-) -> DataFrame:
-    """Keep-newest-per-key over (existing ∪ incoming); incoming beats
-    existing on recency ties, then ``tie_cols`` (descending) make the
-    winner deterministic when key+recency still collides."""
-    inc = incoming.withColumn("_pri", F.lit(1))
-    ex = existing_touched.withColumn("_pri", F.lit(0))
-    order = [F.col("_pri").desc(), F.col(recency_col).desc()] + [
-        F.col(c).desc() for c in tie_cols
-    ]
-    w = Window.partitionBy(*key).orderBy(*order)
-    return (
-        ex.unionByName(inc)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_pri")
-    )
-
-
 def merge_upsert_partitioned(
     existing: DataFrame,
     incoming: DataFrame,
@@ -141,23 +115,20 @@ def merge_upsert_partitioned(
     recency_col: str = "event_ts",
     tie_cols: Sequence[str] = (),
     partition_col: str = "event_month",
-    max_partitions: int = MAX_BATCH_PARTITIONS,
 ) -> tuple[DataFrame, list]:
     """Relational core of the partition-pruned merge: rows of
     ``existing`` in untouched partitions pass through UNREAD by the
     dedup (no shuffle, no rewrite), while touched partitions get the
-    keep-newest-per-key merge. Returns ``(result, touched_values)``.
+    :func:`upsert` merge. Returns ``(result, touched_values)``.
 
     Scale shape: one bounded ``distinct().collect()`` on the partition
     column (capped at MAX_BATCH_PARTITIONS), then one hash shuffle on
     the natural key over touched-partition rows ONLY — cost is
     proportional to the batch's partitions, not the table.
     """
-    vals = _touched_partitions(incoming, partition_col, max_partitions)
+    vals = _touched_partitions(incoming, partition_col)
     cond = _partition_filter(partition_col, vals)
-    merged = _merge_touched(
-        existing.filter(cond), incoming, key, recency_col, tie_cols
-    )
+    merged = upsert(existing.filter(cond), incoming, key, recency_col, tie_cols)
     untouched = existing.filter(~F.coalesce(cond, F.lit(False)))
     return untouched.unionByName(merged), vals
 
@@ -176,8 +147,9 @@ def merge_upsert_to_path(
     batch touches. Returns the touched partition values.
 
     Mechanics: read back the table pruned to touched partitions, merge
-    keep-newest-per-key, then write with dynamic partition overwrite so
-    only touched partition directories are replaced. The merged frame is
+    with :func:`upsert` (on first write, the batch alone), then write
+    with the ``partitionOverwriteMode=dynamic`` writer option so only
+    touched partition directories are replaced. A read-back merge is
     ``localCheckpoint``-ed first — it is batch-sized (touched partitions
     only), and materializing it breaks the plan's lineage on ``path`` so
     the overwrite of a just-read location is legal and cannot corrupt
@@ -185,29 +157,20 @@ def merge_upsert_to_path(
     (Delta/Iceberg) this whole function is ``MERGE INTO``; the parquet
     formulation keeps identical semantics with per-partition atomicity.
     """
-    deduped_in = _merge_touched(
-        incoming.limit(0), incoming, key, recency_col, tie_cols
-    )
-    if not os.path.exists(path):
-        _write_dynamic(deduped_in, path, partition_col)
-        return _touched_partitions(incoming, partition_col)
-
     vals = _touched_partitions(incoming, partition_col)
-    existing = spark.read.parquet(path).filter(
-        _partition_filter(partition_col, vals)
+    if os.path.exists(path):
+        existing = spark.read.parquet(path).filter(
+            _partition_filter(partition_col, vals)
+        )
+        merged = upsert(
+            existing, incoming, key, recency_col, tie_cols
+        ).localCheckpoint()
+    else:
+        merged = upsert(None, incoming, key, recency_col, tie_cols)
+    (
+        merged.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(partition_col)
+        .parquet(path)
     )
-    merged = _merge_touched(
-        existing, incoming, key, recency_col, tie_cols
-    ).localCheckpoint()
-    _write_dynamic(merged, path, partition_col)
     return vals
-
-
-def _write_dynamic(df: DataFrame, path: str, partition_col: str) -> None:
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

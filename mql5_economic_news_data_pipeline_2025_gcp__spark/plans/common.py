@@ -14,11 +14,6 @@ def cents(col: Column | str) -> Column:
     return F.round(c * 100).cast("bigint")
 
 
-#: SQL-side equivalent of :func:`cents`.
-def sql_cents(expr: str) -> str:
-    return f"CAST(round(({expr}) * 100) AS BIGINT)"
-
-
 def keyed_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The synthetic ``events`` table in the reference's series shape:
     (user_id, event_type) ≈ (Currency, Event), plus exact value cents

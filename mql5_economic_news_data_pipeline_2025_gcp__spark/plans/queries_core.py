@@ -363,14 +363,12 @@ def evt_hwm_filter(spark, sf_dir):
 )
 def evt_upsert_dedup(spark, sf_dir):
     ev = keyed_events(spark, sf_dir).withColumn("event_date", F.to_date("ts"))
-    w = Window.partitionBy("user_id", "event_type", "event_date").orderBy(
-        F.col("ts").desc(), F.col("event_id").desc()
-    )
-    return (
-        ev.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_type", "event_date", "event_id", "value_c")
-    )
+    return latest_per_group(
+        ev,
+        key=("user_id", "event_type", "event_date"),
+        order_col="ts",
+        tie_breaker="event_id",
+    ).select("user_id", "event_type", "event_date", "event_id", "value_c")
 
 
 @register(

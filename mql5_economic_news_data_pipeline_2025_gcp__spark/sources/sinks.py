@@ -3,7 +3,7 @@ re-expressed for a columnar catalog.
 
 | Reference | Here |
 |---|---|
-| batched INSERT append, chunks of 1000/500 (DB:120-150)  | ``save_append`` (row-group batching is the parquet writer's job) |
+| batched INSERT append, chunks of 1000/500 (DB:120-150)  | ``df.write.mode('append')``, the first-run branch of ``save_conditional`` (row-group batching is the parquet writer's job) |
 | TRUNCATE + insert replace (DB:126-141)                  | ``save_replace`` |
 | append-if-first-run-else-replace (DB:189-198, TEST:227-230) | ``save_conditional`` |
 | joblib split/params hand-off between stages (TRAIN:401-409) | ``persist_splits`` / ``load_splits`` |
@@ -19,11 +19,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def save_append(df: DataFrame, path: str) -> None:
-    """S7: append rows to a table directory."""
-    df.write.mode("append").parquet(path)
 
 
 def save_replace(df: DataFrame, path: str) -> None:
@@ -60,13 +55,9 @@ def save_partitioned(
     partitions at plan time. With ``mode='overwrite'`` and dynamic
     partition overwrite, only partitions present in ``df`` are replaced.
     """
-    spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    df.write.mode(mode).option("partitionOverwriteMode", "dynamic").partitionBy(
+        *partition_cols
+    ).parquet(path)
 
 
 def persist_splits(splits: dict[str, DataFrame], base_dir: str) -> dict[str, str]:

@@ -41,6 +41,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -225,6 +226,8 @@ def vacuum(root: str, keep_last: int = 1) -> int:
 # ----------------------------------------------- partitioned MERGE
 
 _PDIR = "_p"
+#: Directory value Spark writes for a null partition value.
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _write_files_partitioned(
@@ -250,11 +253,11 @@ def _write_files_partitioned(
 
 
 def _file_partition(relpath: str) -> str | None:
-    """Partition value encoded in a file's path, or None for files
-    written unpartitioned."""
+    """Partition value encoded in a file's path (Hive path escaping
+    undone), or None for files written unpartitioned."""
     for seg in relpath.split(os.sep):
         if seg.startswith(_PDIR + "="):
-            return seg[len(_PDIR) + 1 :]
+            return unquote(seg[len(_PDIR) + 1 :])
     return None
 
 
@@ -267,81 +270,45 @@ def merge_upsert(
     tie_col: str,
     partition_col: str,
 ) -> int:
-    """MERGE-shaped upsert against a partitioned txn table: keep-newest
-    per ``key`` where incoming beats existing, rewriting ONLY the
+    """MERGE-shaped upsert against a partitioned txn table: the S9 merge
+    rule of ``operators.upsert.upsert`` (incoming beats existing, then
+    newest ``recency_col``, then ``tie_col``), rewriting ONLY the
     partitions the batch touches. Untouched partitions' files carry
     into the new manifest BY REFERENCE — zero bytes rewritten, the
     O(batch)-not-O(table) property the monthly-ingest path needs at
-    100 TB, now with an atomic commit instead of dynamic partition
-    overwrite's per-directory swaps.
+    100 TB, with an atomic commit where the parquet write-side merge
+    uses a per-write dynamic partition overwrite.
 
-    Protocol: read current snapshot → prune to touched partitions
-    (path-level: untouched files are never opened) → union + rank
-    (incoming wins recency ties) → write merged partitions → commit
+    Protocol: collect the touched partitions (``_touched_partitions``,
+    capped like every S9 batch) → read current snapshot → prune to
+    touched partitions (path-level: untouched files are never opened;
+    a null partition value lives under Hive's default-partition
+    directory) → ``upsert`` → write merged partitions → commit
     (carried ∪ new). CAS loss retries the whole merge against the new
     head (the read-set must be re-resolved — this is serializable,
     not just atomic)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
+    from ..operators.upsert import _touched_partitions, upsert
 
-    from pyspark.sql import Window as _W
-    from pyspark.sql import functions as _F
-
+    as_dir = incoming.select(incoming[partition_col].cast("string").alias(_PDIR))
     touched = {
-        str(r[0])
-        for r in incoming.select(
-            incoming[partition_col].cast("string")
-        ).distinct().collect()
+        _HIVE_NULL if v is None else v
+        for v in _touched_partitions(as_dir, _PDIR)
     }
-    # the batch itself obeys the key contract: keep-newest within the
-    # batch before it ever touches the table (a batch can carry
-    # multiple versions of one key — e.g. rapid re-publishes)
-    wb = _W.partitionBy(*key).orderBy(
-        _F.col(recency_col).desc(), _F.col(tie_col).desc()
-    )
-    incoming = (
-        incoming.withColumn("_rn", _F.row_number().over(wb))
-        .filter(_F.col("_rn") == 1)
-        .drop("_rn")
-    )
     while True:
         head = versions(root)
-        if not head:
-            files = _write_files_partitioned(incoming, root, partition_col)
-            try:
-                _try_commit(
-                    root, 0, {"version": 0, "op": "merge", "files": files}
-                )
-                return 0
-            except CommitConflict:
-                continue
-        base = _read_manifest(root, head[-1])["files"]
-        carried = [f for f in base if _file_partition(f) not in touched]
+        base = _read_manifest(root, head[-1])["files"] if head else []
         hot = [
             os.path.join(root, f)
             for f in base
             if _file_partition(f) in touched
         ]
-        w = Window.partitionBy(*key).orderBy(
-            F.col("_pri").desc(),
-            F.col(recency_col).desc(),
-            F.col(tie_col).desc(),
+        existing = (
+            spark.read.parquet(*hot).select(*incoming.columns) if hot else None
         )
-        cols = incoming.columns
-        if hot:
-            existing_hot = spark.read.parquet(*hot).select(*cols)
-            unioned = existing_hot.withColumn("_pri", F.lit(0)).unionByName(
-                incoming.withColumn("_pri", F.lit(1))
-            )
-        else:
-            unioned = incoming.withColumn("_pri", F.lit(1))
-        merged = (
-            unioned.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_pri", "_rn")
-        )
+        merged = upsert(existing, incoming, key, recency_col, [tie_col])
         new_files = _write_files_partitioned(merged, root, partition_col)
-        v = head[-1] + 1
+        carried = [f for f in base if _file_partition(f) not in touched]
+        v = head[-1] + 1 if head else 0
         try:
             _try_commit(
                 root,

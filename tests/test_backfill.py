@@ -126,7 +126,7 @@ def test_rollup_refresh_only_recomputes_changed_partitions(spark, tmp_path):
     state = str(tmp_path / "state")
 
     r1 = refresh_rollup_changed_partitions(
-        spark, src_full, rollup, "event_month", keys=["event_type"],
+        src_full, rollup, "event_month", keys=["event_type"],
         sums=["value_c"], state_dir=state,
     )
     assert r1["refreshed"] == r1["checked"] > 1  # first run = full build
@@ -137,7 +137,7 @@ def test_rollup_refresh_only_recomputes_changed_partitions(spark, tmp_path):
 
     # no source change → no-op
     r2 = refresh_rollup_changed_partitions(
-        spark, src_full, rollup, "event_month", keys=["event_type"],
+        src_full, rollup, "event_month", keys=["event_type"],
         sums=["value_c"], state_dir=state,
     )
     assert r2["refreshed"] == 0
@@ -147,7 +147,7 @@ def test_rollup_refresh_only_recomputes_changed_partitions(spark, tmp_path):
         ~((F.col("event_month") == victim) & (F.col("event_id") % 2 == 0))
     )
     r3 = refresh_rollup_changed_partitions(
-        spark, src_changed, rollup, "event_month", keys=["event_type"],
+        src_changed, rollup, "event_month", keys=["event_type"],
         sums=["value_c"], state_dir=state,
     )
     assert r3["parts"] == [victim]

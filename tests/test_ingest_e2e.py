@@ -361,6 +361,23 @@ def test_txn_merge_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     assert a == b
 
 
+def test_txn_merge_upsert_merges_null_and_escaped_partitions(spark, tmp_path):
+    """A null partition value lives under Hive's default-partition
+    directory and a value with a path character under its escaped name;
+    both partitions must be merged, not carried over beside the batch."""
+    from mql5_economic_news_data_pipeline_2025_gcp__spark.sources import txn
+
+    root = str(tmp_path / "tbl")
+    schema = "k string, d string, ts long"
+    key = ["k", "d"]
+    base = spark.createDataFrame([("a", None, 1), ("b", "EUR/USD", 1)], schema)
+    txn.merge_upsert(spark, root, base, key, "ts", "ts", "d")
+    incoming = spark.createDataFrame([("a", None, 2), ("b", "EUR/USD", 2)], schema)
+    txn.merge_upsert(spark, root, incoming, key, "ts", "ts", "d")
+    got = sorted(tuple(r) for r in txn.read(spark, root).select("k", "d", "ts").collect())
+    assert got == [("a", None, 2), ("b", "EUR/USD", 2)]
+
+
 def test_txn_data_skipping_and_exactly_once_sink(spark, tmp_path):
     """Manifest-level data skipping: a range predicate on the sort
     column opens a strict subset of files and still returns exactly the

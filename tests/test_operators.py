@@ -1504,7 +1504,7 @@ def test_merge_upsert_partition_pruned(spark, tmp_path):
     assert got == want
 
 
-def test_merge_upsert_batch_partition_cap(spark):
+def test_merge_upsert_batch_partition_cap(spark, monkeypatch):
     """A 'batch' touching more partitions than MAX_BATCH_PARTITIONS is a
     miswired full-table load — the merge must refuse, not collect it."""
     import pytest
@@ -1514,10 +1514,10 @@ def test_merge_upsert_batch_partition_cap(spark):
     df = spark.range(20).select(
         F.col("id").alias("k"), F.col("id").alias("p"), F.col("id").alias("ts2")
     )
+    monkeypatch.setattr(U, "MAX_BATCH_PARTITIONS", 10)
     with pytest.raises(ValueError, match="distinct"):
         U.merge_upsert_partitioned(
-            df, df, key=("k",), recency_col="ts2", partition_col="p",
-            max_partitions=10,
+            df, df, key=("k",), recency_col="ts2", partition_col="p"
         )
 
 
