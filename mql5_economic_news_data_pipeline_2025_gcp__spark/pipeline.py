@@ -8,6 +8,16 @@ consumes model *outputs* (predictions) as DataFrames; actual LSTM/XGB
 training is out of engine scope (SURVEY §2.10). A deterministic stub
 predictor (lag-1) keeps the full dataflow runnable and oracle-checkable;
 real models drop in behind ``predict_fn``.
+
+Every stage runs on two steps: ``_fit`` turns a training slice into
+the model state (routing table + per-series min/max) and ``_evaluate``
+scores an evaluation slice against that state (re-derived features,
+training-param normalization, routing, prediction, per-group metrics).
+``run_train`` and each walk-forward fold fit; ``run_validate``,
+``run_test`` and each fold evaluate. Series are keyed by
+``SERIES_KEY`` and ordered by ``TIME_COL``; the train/val/test split
+orders by ``(TIME_COL, *SERIES_KEY)`` so tied timestamps split the same
+way whatever the input row order.
 """
 
 from __future__ import annotations
@@ -21,16 +31,21 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .operators.features import (
+    SERIES_KEY,
     latest_per_group,
+    normalization_params,
     with_filled,
     with_high_impact_count,
     with_lag_features,
     with_min_max_normalized,
-    normalization_params,
 )
 from .operators.metrics import group_metrics, metrics_summary
 from .operators.routing import model_routing, with_model_type
 from .operators.split import split_labels
+
+#: Time axis of every series; ``(TIME_COL, *SERIES_KEY)`` is a total
+#: order over the upserted events (the natural key is unique there).
+TIME_COL = "event_ts"
 
 #: Reference defaults (API:30-42 = TRAIN:20-32; PARAMS file overrides).
 DEFAULT_PARAMS = {
@@ -115,11 +130,12 @@ def load_last_run_params(history_path: str) -> dict | None:
 @dataclass
 class PipelineResult:
     metrics: DataFrame
-    summary: DataFrame
     extra: dict = field(default_factory=dict)
 
-
-SERIES_KEY = ("Currency", "Event")
+    @property
+    def summary(self) -> DataFrame:
+        """A8 scalar summary of ``metrics`` (reference VAL:317-319)."""
+        return metrics_summary(self.metrics)
 
 
 def _default_predict(df: DataFrame) -> DataFrame:
@@ -127,11 +143,7 @@ def _default_predict(df: DataFrame) -> DataFrame:
     return df.withColumn("prediction", F.col("value_lag1"))
 
 
-def routed_stub_predict(
-    df: DataFrame,
-    key=SERIES_KEY,
-    order=("event_ts",),
-) -> DataFrame:
+def routed_stub_predict(df: DataFrame) -> DataFrame:
     """M5↔M6 integration: route each series through its pandas_udf
     inference island (LSTM-stub over sequence windows for 'rnn' series,
     XGB-stub over lag features otherwise — TRAIN:184-231). Expects a
@@ -141,7 +153,7 @@ def routed_stub_predict(
     """
     from .operators.inference import SEQ_LENGTH, lstm_stub_predict, xgb_stub_predict
 
-    w = Window.partitionBy(*key).orderBy(*order)
+    w = Window.partitionBy(*SERIES_KEY).orderBy(TIME_COL)
     rnn = (
         df.filter(F.col("model_type") == "rnn")
         .withColumn(
@@ -165,30 +177,58 @@ def routed_stub_predict(
     return rnn.unionByName(xgb)
 
 
-def build_features(
-    events: DataFrame,
-    key=SERIES_KEY,
-    order=("event_ts",),
-    fill_direction: str = "ffill_then_bfill",
-) -> DataFrame:
+def build_features(events: DataFrame, fill_direction: str = "ffill_then_bfill") -> DataFrame:
     """The reference's create_features chain (TRAIN:415-433): high-impact
     count, lag-1 features, directional fill. One shuffle on the series
     key services every window."""
-    df = events.withColumn("EventDate", F.to_date(F.col(order[0])))
+    df = events.withColumn("EventDate", F.to_date(F.col(TIME_COL)))
     df = with_high_impact_count(
-        df, impact_col="ImpactOrdinal", currency_col=key[0], date_col="EventDate"
+        df, impact_col="ImpactOrdinal", currency_col=SERIES_KEY[0], date_col="EventDate"
     )
-    df = with_lag_features(df, ["value"], key=key, order=order)
-    df = with_filled(df, ["value_lag1"], key=key, order=order, direction=fill_direction)
-    return df
+    df = with_lag_features(df, ["value"], order=(TIME_COL,))
+    return with_filled(df, ["value_lag1"], order=(TIME_COL,), direction=fill_direction)
+
+
+def _split(df: DataFrame, label: str, exact: bool) -> DataFrame:
+    """The rows of one chronological split (W3), ordered by the total
+    order so tied timestamps land in the same split whatever the input
+    row order."""
+    labeled = split_labels(df, order=(TIME_COL, *SERIES_KEY), exact=exact)
+    return labeled.filter(F.col("split") == label)
+
+
+def _score(scored: DataFrame) -> DataFrame:
+    """Per-group R²/MSE of predictions against actuals (A7)."""
+    return group_metrics(scored, actual_col="value", pred_col="prediction")
+
+
+def _fit(train_feats: DataFrame) -> tuple[DataFrame, dict]:
+    """Model state from a training slice: the routing table and the
+    per-series min/max (TRAIN:377-389, TRAIN:467-472); returns the
+    slice routed and normalized, and ``{routing, norm_params}``."""
+    routing = model_routing(train_feats)
+    norm_params = normalization_params(train_feats, ["value"])
+    train = with_min_max_normalized(with_model_type(train_feats, routing), ["value"])
+    return train, {"routing": routing, "norm_params": norm_params}
+
+
+def _evaluate(
+    rows: DataFrame, state: dict, predict_fn: Callable[[DataFrame], DataFrame]
+) -> tuple[DataFrame, DataFrame]:
+    """Score an evaluation slice against a fitted ``state``: re-derive
+    features on the slice ONLY (leakage-aware, VAL:220-236), normalize
+    with the TRAINING params plus fallback (VAL:258-287), route,
+    predict. Returns the scored rows and their per-group metrics."""
+    feats = build_features(rows, "bfill_then_ffill")
+    feats = with_min_max_normalized(feats, ["value"], params=state["norm_params"])
+    scored = predict_fn(with_model_type(feats, state["routing"]))
+    return scored, _score(scored)
 
 
 def run_train(
     events: DataFrame,
     params: dict | None = None,
     predict_fn: Callable[[DataFrame], DataFrame] = _default_predict,
-    key=SERIES_KEY,
-    order=("event_ts",),
     exact_split: bool = True,
 ) -> PipelineResult:
     """POST /train analogue: features → split → routing → normalize →
@@ -199,72 +239,38 @@ def run_train(
     approxQuantile-cutoff scale path (map-only labeling, no global
     sort) — the form a 100 TB run must use."""
     params = params or merge_params(None, None)
-    feats = build_features(events, key=key, order=order)
-    labeled = split_labels(feats, order=order, exact=exact_split)
-    train_df = labeled.filter(F.col("split") == "train")
-    routing = model_routing(train_df, key=key)
-    train_df = with_model_type(train_df, routing, key=key)
-    train_df = with_min_max_normalized(train_df, ["value"], key=key)
-    norm_params = normalization_params(train_df, ["value"], key=key)
-    scored = predict_fn(train_df)
-    metrics = group_metrics(scored, actual_col="value", pred_col="prediction", key=key)
-    return PipelineResult(
-        metrics=metrics,
-        summary=metrics_summary(metrics),
-        extra={"routing": routing, "norm_params": norm_params, "params": params},
-    )
+    train = _split(build_features(events), "train", exact_split)
+    train, state = _fit(train)
+    return PipelineResult(_score(predict_fn(train)), extra={**state, "params": params})
 
 
 def run_validate(
     events: DataFrame,
     train_result: PipelineResult,
     predict_fn: Callable[[DataFrame], DataFrame] = _default_predict,
-    key=SERIES_KEY,
-    order=("event_ts",),
     exact_split: bool = True,
 ) -> PipelineResult:
-    """POST /validate analogue: re-derive features on the val split ONLY
-    (leakage-aware, VAL:220-236), normalize with TRAINING params +
-    fallback (VAL:258-287), score, per-group metrics."""
-    labeled = split_labels(events, order=order, exact=exact_split)
-    val = labeled.filter(F.col("split") == "val")
-    feats = build_features(val, key=key, order=order, fill_direction="bfill_then_ffill")
-    feats = with_min_max_normalized(
-        feats, ["value"], key=key, params=train_result.extra["norm_params"]
-    )
-    feats = with_model_type(feats, train_result.extra["routing"], key=key)
-    scored = predict_fn(feats)
-    metrics = group_metrics(scored, actual_col="value", pred_col="prediction", key=key)
-    return PipelineResult(metrics=metrics, summary=metrics_summary(metrics))
+    """POST /validate analogue: the val split scored against the train
+    state."""
+    val = _split(events, "val", exact_split)
+    _, metrics = _evaluate(val, train_result.extra, predict_fn)
+    return PipelineResult(metrics)
 
 
 def run_test(
     events: DataFrame,
     train_result: PipelineResult,
     predict_fn: Callable[[DataFrame], DataFrame] = _default_predict,
-    key=SERIES_KEY,
-    order=("event_ts",),
     exact_split: bool = True,
 ) -> PipelineResult:
     """POST /test analogue: test-split metrics + live forecast = latest
     denormalized prediction per series (TEST:95-120)."""
-    labeled = split_labels(events, order=order, exact=exact_split)
-    test = labeled.filter(F.col("split") == "test")
-    feats = build_features(test, key=key, order=order, fill_direction="bfill_then_ffill")
-    feats = with_min_max_normalized(
-        feats, ["value"], key=key, params=train_result.extra["norm_params"]
-    )
-    feats = with_model_type(feats, train_result.extra["routing"], key=key)
-    scored = predict_fn(feats)
-    metrics = group_metrics(scored, actual_col="value", pred_col="prediction", key=key)
+    test = _split(events, "test", exact_split)
+    scored, metrics = _evaluate(test, train_result.extra, predict_fn)
     live = latest_per_group(
-        scored.filter(F.col("prediction").isNotNull()),
-        key=key,
-        order_col=order[0],
-    ).select(*key, F.col("prediction").alias("ForecastValue"))
-    return PipelineResult(
-        metrics=metrics, summary=metrics_summary(metrics), extra={"live_forecasts": live}
-    )
+        scored.filter(F.col("prediction").isNotNull()), order_col=TIME_COL
+    ).select(*SERIES_KEY, F.col("prediction").alias("ForecastValue"))
+    return PipelineResult(metrics, extra={"live_forecasts": live})
 
 
 def run_automate(
@@ -272,8 +278,6 @@ def run_automate(
     params: dict | None = None,
     predict_fn: Callable[[DataFrame], DataFrame] = _default_predict,
     skip_training: bool = False,
-    key=SERIES_KEY,
-    order=("event_ts",),
     exact_split: bool = True,
     history_path: str | None = None,
 ) -> dict[str, PipelineResult]:
@@ -292,14 +296,12 @@ def run_automate(
                 None, None, last_run_params=load_last_run_params(history_path)
             )
         record_run_params(history_path, params)
-    train_res = run_train(events, params=params, predict_fn=predict_fn, key=key,
-                          order=order, exact_split=exact_split)
+    train_res = run_train(events, params=params, predict_fn=predict_fn, exact_split=exact_split)
     if not skip_training:
         out["train"] = train_res
-    out["validate"] = run_validate(events, train_res, predict_fn=predict_fn, key=key,
-                                   order=order, exact_split=exact_split)
-    out["test"] = run_test(events, train_res, predict_fn=predict_fn, key=key,
-                           order=order, exact_split=exact_split)
+    out["validate"] = run_validate(events, train_res, predict_fn=predict_fn,
+                                   exact_split=exact_split)
+    out["test"] = run_test(events, train_res, predict_fn=predict_fn, exact_split=exact_split)
     return out
 
 
@@ -308,8 +310,6 @@ def run_walk_forward(
     n_folds: int = 3,
     params: dict | None = None,
     predict_fn: Callable[[DataFrame], DataFrame] = _default_predict,
-    key=SERIES_KEY,
-    order=("event_ts",),
     exact: bool = True,
 ) -> list[PipelineResult]:
     """Rolling-origin (walk-forward) cross-validation — the form of CV
@@ -319,51 +319,25 @@ def run_walk_forward(
 
     Fold i trains on everything before cutoff c_i and evaluates on
     [c_i, c_{i+1}), with cutoffs at fractions (i+1)/(n_folds+1) of the
-    time axis. Each fold mirrors the train→validate contract exactly:
-    routing and normalization parameters derive from the fold's TRAIN
-    slice only and are applied to its eval slice (leakage-aware,
-    VAL:258-287 semantics).
+    time axis. Each fold is the train→validate contract exactly: ``_fit``
+    on the fold's TRAIN slice only, ``_evaluate`` on its eval slice
+    (leakage-aware, VAL:258-287 semantics).
 
-    Scale: cutoffs come from ONE approxQuantile job over the order
+    Scale: cutoffs come from ONE approxQuantile job over the time
     column (``exact=True`` sets relativeError 0 — exact quantiles,
     still no global sort); fold slicing is a map-side filter, so k
     folds cost k filtered passes over the plan, never a shuffle of the
     raw events.
     """
-    col = order[0]
+    us = F.unix_micros(F.col(TIME_COL))
     fracs = [(i + 1) / (n_folds + 1) for i in range(n_folds + 1)]
-    us = events.select(F.unix_micros(F.col(col)).alias("_us"))
-    cuts = us.approxQuantile("_us", fracs, 0.0 if exact else 0.01)
+    cuts = events.select(us.alias("_us")).approxQuantile("_us", fracs, 0.0 if exact else 0.01)
 
     results: list[PipelineResult] = []
     for i in range(n_folds):
-        train = events.filter(F.unix_micros(F.col(col)) < cuts[i])
-        ev = events.filter(
-            (F.unix_micros(F.col(col)) >= cuts[i])
-            & (F.unix_micros(F.col(col)) < cuts[i + 1])
-        )
-        feats = build_features(train, key=key, order=order)
-        routing = model_routing(feats, key=key)
-        feats = with_model_type(feats, routing, key=key)
-        feats = with_min_max_normalized(feats, ["value"], key=key)
-        norm_params = normalization_params(feats, ["value"], key=key)
-
-        efeats = build_features(
-            ev, key=key, order=order, fill_direction="bfill_then_ffill"
-        )
-        efeats = with_min_max_normalized(
-            efeats, ["value"], key=key, params=norm_params
-        )
-        efeats = with_model_type(efeats, routing, key=key)
-        scored = predict_fn(efeats)
-        metrics = group_metrics(
-            scored, actual_col="value", pred_col="prediction", key=key
-        )
-        results.append(
-            PipelineResult(
-                metrics=metrics,
-                summary=metrics_summary(metrics),
-                extra={"fold": i, "cutoff_us": cuts[i], "params": params or {}},
-            )
-        )
+        _, state = _fit(build_features(events.filter(us < cuts[i])))
+        ev = events.filter((us >= cuts[i]) & (us < cuts[i + 1]))
+        _, metrics = _evaluate(ev, state, predict_fn)
+        extra = {"fold": i, "cutoff_us": cuts[i], "params": params or {}}
+        results.append(PipelineResult(metrics, extra=extra))
     return results

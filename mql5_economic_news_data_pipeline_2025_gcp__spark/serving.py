@@ -8,14 +8,14 @@ touching the handlers).
 Semantics map 1:1 onto ``pipeline``:
 
 - ``POST /train``    → ``run_train`` with reference param resolution
-  (defaults < last-run < file < body — ``merge_params``, API:241-264);
-  the train result (routing + normalization params) becomes the
-  server's current model state, the role MLflow's registry plays in
-  the reference.
+  (defaults < last-run < file < body — ``merge_params``, API:241-264;
+  ``/automate`` resolves the same way); the train result (routing +
+  normalization params) becomes the server's current model state, the
+  role MLflow's registry plays in the reference.
 - ``POST /validate`` / ``POST /test`` → ``run_validate`` /
-  ``run_test`` against the saved train state; 409 when no train has
-  run (the reference 404s when model artifacts are missing,
-  API:281-284).
+  ``run_test`` against the saved train state, through one handler
+  body; 409 when no train has run (the reference 404s when model
+  artifacts are missing, API:281-284).
 - ``POST /automate`` → ``run_automate`` (train → validate → test,
   ``skip_training`` short-circuit, API:318-373).
 - ``GET /health``    → a real engine probe (``SELECT 1`` through the
@@ -24,7 +24,8 @@ Semantics map 1:1 onto ``pipeline``:
   (API:178-223).
 
 Responses are JSON: the A8 scalar summary always, per-group metric
-rows capped at ``max_rows`` (an HTTP response is a driver-side
+rows capped at ``MAX_RESPONSE_ROWS`` with ``metrics_truncated`` set
+when the table has more (an HTTP response is a driver-side
 materialization — the cap is the same bounded-collect discipline as
 the fit paths; full metric tables belong in a sink, not a response
 body).
@@ -62,20 +63,20 @@ from .pipeline import (
 MAX_RESPONSE_ROWS = 1000
 
 
-def _df_rows(df: DataFrame, cap: int = MAX_RESPONSE_ROWS) -> list[dict]:
-    rows = df.limit(cap + 1).collect()
-    out = [r.asDict(recursive=True) for r in rows[:cap]]
-    return out
+def _df_rows(df: DataFrame) -> tuple[list[dict], bool]:
+    """At most ``MAX_RESPONSE_ROWS`` rows of ``df``, and whether it has
+    more."""
+    rows = df.limit(MAX_RESPONSE_ROWS + 1).collect()
+    out = [r.asDict(recursive=True) for r in rows[:MAX_RESPONSE_ROWS]]
+    return out, len(rows) > MAX_RESPONSE_ROWS
 
 
 def _result_payload(res: PipelineResult, include_rows: bool = True) -> dict:
-    payload: dict = {"summary": _df_rows(res.summary, cap=1)[0]}
+    payload: dict = {"summary": res.summary.first().asDict()}
     if include_rows:
-        metric_rows = _df_rows(res.metrics)
-        payload["metrics"] = metric_rows
-        payload["metrics_truncated"] = len(metric_rows) == MAX_RESPONSE_ROWS
-    if "live_forecasts" in (res.extra or {}):
-        payload["live_forecasts"] = _df_rows(res.extra["live_forecasts"])
+        payload["metrics"], payload["metrics_truncated"] = _df_rows(res.metrics)
+    if "live_forecasts" in res.extra:
+        payload["live_forecasts"], _ = _df_rows(res.extra["live_forecasts"])
     return payload
 
 
@@ -181,34 +182,24 @@ class EngineAPI:
         out["params"] = params
         return 200, out
 
-    def _require_train(self) -> PipelineResult | None:
+    def _evaluate(self, stage: str, run: Callable[..., PipelineResult]) -> tuple[int, dict]:
+        """/validate and /test: score against the saved train state."""
         with self._lock:
-            return self._train_result
+            tr = self._train_result
+        if tr is None:
+            return 409, {"error": "no trained model state; POST /train first"}
+        res = run(self._events(), tr, predict_fn=self.predict_fn, exact_split=self.exact_split)
+        self._persist(stage, res)
+        return 200, _result_payload(res)
 
     def validate(self, body: dict) -> tuple[int, dict]:
-        tr = self._require_train()
-        if tr is None:
-            return 409, {"error": "no trained model state; POST /train first"}
-        res = run_validate(
-            self._events(), tr, predict_fn=self.predict_fn,
-            exact_split=self.exact_split,
-        )
-        self._persist("validate", res)
-        return 200, _result_payload(res)
+        return self._evaluate("validate", run_validate)
 
     def test(self, body: dict) -> tuple[int, dict]:
-        tr = self._require_train()
-        if tr is None:
-            return 409, {"error": "no trained model state; POST /train first"}
-        res = run_test(
-            self._events(), tr, predict_fn=self.predict_fn,
-            exact_split=self.exact_split,
-        )
-        self._persist("test", res)
-        return 200, _result_payload(res)
+        return self._evaluate("test", run_test)
 
     def automate(self, body: dict) -> tuple[int, dict]:
-        params = body.get("params")
+        params = self._resolve_params(body.get("params"))
         results = run_automate(
             self._events(),
             params=params,

@@ -2,12 +2,17 @@
 (/health, /, /train, /validate, /test, /automate — API:178-404) over a
 real ephemeral-port server, driven with stdlib urllib."""
 
+import collections
 import datetime
 import json
 import urllib.error
 import urllib.request
 
 import pytest
+
+from mql5_economic_news_data_pipeline_2025_gcp__spark import pipeline, serving
+from mql5_economic_news_data_pipeline_2025_gcp__spark.serving import EngineAPI, serve
+from mql5_economic_news_data_pipeline_2025_gcp__spark.sources import sinks
 
 
 def _post(base, path, body=None):
@@ -30,12 +35,8 @@ def _get(base, path):
 
 
 @pytest.fixture(scope="module")
-def server(spark):
-    from mql5_economic_news_data_pipeline_2025_gcp__spark.serving import (
-        EngineAPI,
-        serve,
-    )
-
+def events(spark):
+    """Two series (USD/EUR CPI) of 40 hourly rows each."""
     rows = []
     base_ts = datetime.datetime(2025, 1, 1)
     for g, cur in enumerate(["USD", "EUR"]):
@@ -44,12 +45,16 @@ def server(spark):
                 (base_ts + datetime.timedelta(hours=i), cur, "CPI",
                  float(i % 7) + g, 1)
             )
-    df = spark.createDataFrame(
+    return spark.createDataFrame(
         rows,
         "event_ts timestamp, Currency string, Event string, "
         "value double, ImpactOrdinal int",
     )
-    api = EngineAPI(spark, events_provider=lambda: df)
+
+
+@pytest.fixture(scope="module")
+def server(spark, events):
+    api = EngineAPI(spark, events_provider=lambda: events)
     httpd = serve(api)
     host, port = httpd.server_address
     yield f"http://{host}:{port}"
@@ -108,6 +113,59 @@ def test_automate_and_errors(server):
     except urllib.error.HTTPError as e:
         raised = e.code
     assert raised == 400
+
+
+def test_automate_resolves_params_like_train(spark, events, tmp_path):
+    """/automate takes the params file into account (defaults < last
+    run < file < body, as /train does) and records what it resolved."""
+    params_path = tmp_path / "params.json"
+    params_path.write_text(json.dumps({"SEQ_LENGTH": 9}))
+    history = str(tmp_path / "history.jsonl")
+    api = EngineAPI(spark, events_provider=lambda: events,
+                    params_path=str(params_path), history_path=history)
+    status, _ = api.automate({})
+    assert status == 200
+    assert pipeline.load_last_run_params(history)["SEQ_LENGTH"] == 9
+
+
+def test_metrics_truncated_only_when_rows_are_left_out(spark, events, monkeypatch):
+    """Two metric rows: a cap of two returns both and is not truncated,
+    a cap of one returns one and is."""
+    api = EngineAPI(spark, events_provider=lambda: events)
+    monkeypatch.setattr(serving, "MAX_RESPONSE_ROWS", 2)
+    status, body = api.train({})
+    assert status == 200
+    assert len(body["metrics"]) == 2 and body["metrics_truncated"] is False
+    monkeypatch.setattr(serving, "MAX_RESPONSE_ROWS", 1)
+    status, body = api.train({})
+    assert len(body["metrics"]) == 1 and body["metrics_truncated"] is True
+
+
+def test_automate_calls_stages_and_sinks_through_module_names(
+    spark, events, tmp_path, monkeypatch
+):
+    """The benchmark traces /automate by wrapping ``pipeline.run_train``,
+    ``run_validate``, ``run_test`` and ``sinks.save_conditional`` in
+    place; one request must reach each stage once and write each
+    stage's metric and summary tables."""
+    calls = collections.Counter()
+
+    def count(module, name):
+        fn = getattr(module, name)
+
+        def counted(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(module, name, counted)
+
+    for stage in ("run_train", "run_validate", "run_test"):
+        count(pipeline, stage)
+    count(sinks, "save_conditional")
+    api = EngineAPI(spark, events_provider=lambda: events, sink_dir=str(tmp_path / "sinks"))
+    status, _ = api.automate({})
+    assert status == 200
+    assert calls == {"run_train": 1, "run_validate": 1, "run_test": 1, "save_conditional": 6}
 
 
 def test_runner_over_http(server):
